@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds over
   * SPARK_GRAFT_SF_DIR. An untimed warmup action per table loads file
   * indexes/footers and JIT-warms the parquet reader so the first timed
@@ -17,9 +15,9 @@ import org.apache.spark.sql.SparkSession
   * Each query reports the MEDIAN of `Passes` (3) timed runs — single-pass
   * timings on a busy box swing enough (~±30% observed round-over-round on
   * unchanged code) to drown real regressions; the total is the sum of the
-  * medians. Failures are NOT swallowed: a failing query is reported with
-  * value -1 and its error message in the `errors` map, and the process
-  * exits non-zero.
+  * printed (3-decimal) medians. Failures are NOT swallowed: a failing
+  * query is reported with value -1 and its error message in the `errors`
+  * map, and the process exits non-zero.
   */
 object Bench {
   /** Timed passes per query (median reported). SPARK_GRAFT_PASSES
@@ -149,11 +147,10 @@ object Bench {
       }
     }
     def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\\p{Cntrl}]", " ") + "\""
-    val qs = out.map { case (k, v) => s"\"" + k + "\":" + sec3(v) }.mkString("{", ",", "}")
+    val (total, qs) = totals(out.toSeq)
     val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
-    val total = out.values.filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":${sec3(total)},"unit":"sec","mode":"forked","queries":$qs,"errors":$errJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","mode":"forked","queries":$qs,"errors":$errJson,"sf":"$sfDir"}""")
     if (errors.nonEmpty) sys.exit(1)
   }
 
@@ -167,6 +164,16 @@ object Bench {
   private def sec3(v: Double): String =
     if (v < 0) "-1"
     else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** `value` and `queries` of the one-line JSON. `value` is the sum of the
+    * per-query values as printed, so it equals Σ `queries` exactly for a
+    * consumer that cross-checks them; failed (-1) entries are excluded. */
+  private[graft] def totals(results: Seq[(String, Double)]): (String, String) = {
+    val printed = results.map { case (k, v) => k -> sec3(v) }
+    val total = printed.collect { case (_, s) if s != "-1" => BigDecimal(s) }.sum
+    (total.setScale(3).bigDecimal.toPlainString,
+      printed.map { case (k, s) => "\"" + k + "\":" + s }.mkString("{", ",", "}"))
+  }
 
   /** Parse a fork-mode reference artifact's `queries` map, keeping only
     * entries at the sweep's own scale factor. Whitespace-tolerant on
@@ -240,24 +247,10 @@ object Bench {
         require(i > 0, s"SPARK_GRAFT_CONF entries must be key=value, got '$kv'")
         kv.substring(0, i) -> kv.substring(i + 1)
       }.toSeq
-    // Codegen class cache sized to the catalog (round-13). The default
-    // 100-entry cache can't hold 234 distinct plans' codegen units, so a
-    // full sweep recompiled EVERY whole-stage source on EVERY timed pass
-    // (Janino time, not plan time): the top-40 subset measured 59.9 s at
-    // the default vs 45.0 s at 5000 entries, and a 1-entry control ran
-    // >8 min — the conf is live and the effect is compilation, not noise.
-    // Not a local[32] trick: any long-lived driver cycling a catalog of
-    // plans (scheduled batches, a query service) hits the same cliff;
-    // 5000 entries bounds metaspace at a few hundred MB worst-case.
-    // Set BEFORE extraConf so SPARK_GRAFT_CONF probes can override it.
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.shuffle.partitions", shufflePartitions))(
-      (b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // GraftSession applies these after its defaults (incl. the catalog-sized
+    // codegen cache), so SPARK_GRAFT_CONF probes can override any of them.
+    val spark = GraftSession.local(cpus.toInt,
+      ("spark.sql.shuffle.partitions" -> shufflePartitions) +: extraConf)
     spark.sparkContext.setLogLevel("WARN")
     // The driver fixtures are one parquet file per table (one input
     // partition): let map-heavy queries (q20/q21/q46) spread the scan.
@@ -457,8 +450,7 @@ object Bench {
           case _ => name -> t
         }
       }
-    val qs = finalResults.map { case (k, v) => s"\"" + k + "\":" + sec3(v) }
-      .mkString("{", ",", "}")
+    val (total, qs) = totals(finalResults)
     // \p{Cntrl} (not just \n\r\t): ANY control character in an exception
     // message would otherwise break the one-line JSON contract
     def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\\p{Cntrl}]", " ") + "\""
@@ -468,7 +460,6 @@ object Bench {
       "," + rechecks.map { case (k, (a, b)) =>
         "\"" + k + "\":{\"in_sweep\":" + sec3(a) + ",\"recheck\":" + sec3(b) + "}"
       }.mkString("\"rechecks\":{", ",", "}")
-    val total = finalResults.map(_._2).filter(_ >= 0).sum
     val shufJson = if (!shuffleMetrics) "" else {
       def m(mm: scala.collection.Map[String, Long]) =
         mm.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -477,7 +468,7 @@ object Bench {
     val storJson = if (!storageMetrics) "" else
       storageBytes.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString(""","storage_bytes":{""", ",", "}")
-    println(s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$qs,"errors":$errJson$recheckJson$shufJson$storJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson$recheckJson$shufJson$storJson,"sf":"$sfDir"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

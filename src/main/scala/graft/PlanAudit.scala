@@ -55,14 +55,8 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // audit the static plan: AQE would hide the pre-runtime shape
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    // audit the static plan: AQE would hide the pre-runtime shape
+    val spark = GraftSession.local(8, Seq("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-28s shuf bcast cartesian bnlj gwindow")
     sweep(spark, sfDir).foreach {

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Round-13 measurement aid: dump `.explain("formatted")` for catalog
@@ -24,12 +23,7 @@ object PlanDump {
       args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet
     else Set.empty[String]
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // same fixture-layout conf as Bench so the dumped plan is the timed one
     spark.conf.set("graft.bench.singleFileFixture",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Freezes the catalog-wide SHUFFLE BUDGET: one sweep of every query's
   * static physical plan (AQE off — the pre-runtime shape), rendered as the
   * `graft.ShuffleBudget` test source. PlanAuditSpec then fails BY NAME any
@@ -22,13 +20,7 @@ object ShuffleBudgetGen {
     val outFile = args.headOption.getOrElse(
       "src/test/scala/graft/ShuffleBudget.scala")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(8, Seq("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
     val counts = PlanAudit.sweep(spark, sfDir)
     val errs = counts.collect { case (n, c) if c.error.isDefined => n }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * Merging never loses information: sparse∪sparse (spilling to dense on
   * overflow), sparse folded into dense, dense register-max dense.
   *
-  * Usage: `DistinctSketch.register(spark)` then
+  * Usage (in a GraftSession, or after `GraftExtensions.install(spark)`):
   * `SELECT hll_distinct(col[, precision[, sparseLimit]])`, or the Column
   * API `DistinctSketch.hll_distinct(col, precision, sparseLimit)`.
   */
@@ -286,8 +286,9 @@ object DistinctSketch {
 
   /** Idempotent temp-function registration: `createOrReplaceTempFunction`
     * logs a replacement WARN every time a pipeline re-installs (Bench
-    * installs per query) — register only when absent instead. Shared by
-    * every graft function object. */
+    * installs per query) — register only when absent instead. Used for
+    * `vec_argmin_cell`'s per-matrix entries, which the static
+    * `GraftExtensions.functions` table cannot list. */
   private[graft] def createIfAbsent(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit = {
     val r = spark.sessionState.functionRegistry
@@ -348,7 +349,7 @@ object DistinctSketch {
     HllEstimate(exprs.head)
   }
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — needs a GraftSession (or `GraftExtensions.install`). */
   def hll_sketch(c: Column, precision: Int = 14, sparseLimit: Int = 4096): Column =
     org.apache.spark.sql.functions.call_function(
       "hll_sketch", c,
@@ -366,18 +367,12 @@ object DistinctSketch {
       litIntArg(exprs, 2, 4096, "hll_distinct")).toAggregateExpression()
   }
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — needs a GraftSession (or `GraftExtensions.install`). */
   def hll_distinct(c: Column, precision: Int = 14, sparseLimit: Int = 4096): Column =
     org.apache.spark.sql.functions.call_function(
       "hll_distinct", c,
       org.apache.spark.sql.functions.lit(precision),
       org.apache.spark.sql.functions.lit(sparseLimit))
-
-  def register(spark: SparkSession): Unit = {
-    createIfAbsent(spark, "hll_distinct", build)
-    createIfAbsent(spark, "hll_sketch", buildSketch)
-    createIfAbsent(spark, "hll_estimate", buildEstimate)
-  }
 }
 
 /** `hll_estimate(sketch)` — distinct-count estimate read off the stored

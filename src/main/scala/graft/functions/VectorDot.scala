@@ -50,16 +50,9 @@ object VectorDot {
     acc
   }
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — needs a GraftSession (or `GraftExtensions.install`). */
   def vec_dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
-
-  def register(spark: SparkSession): Unit = {
-    DistinctSketch.createIfAbsent(spark, "vec_dot",
-      exprs => VectorDot(exprs(0), exprs(1)))
-    DistinctSketch.createIfAbsent(spark, "vec_norm",
-      exprs => VectorNorm(exprs.head))
-  }
 }
 
 /** L2 norm of an array<double> column as a native codegen'd expression —

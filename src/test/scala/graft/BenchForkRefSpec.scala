@@ -46,4 +46,14 @@ class BenchForkRefSpec extends AnyFunSuite {
     val m = Bench.parseForkRef(compact, "/root/testdata/sf0.1")
     assert(!m.contains("q99_failed"))
   }
+
+  test("value is the sum of the per-query values as printed") {
+    // each 0.0004 prints as 0.000: a full-precision total would print 1.235
+    val (value, qs) = Bench.totals(Seq(
+      "a" -> 0.0004, "b" -> 0.0004, "c" -> 0.0004, "d" -> 1.2341, "e" -> -1.0))
+    assert(qs == """{"a":0.000,"b":0.000,"c":0.000,"d":1.234,"e":-1}""")
+    val printed = "\"[^\"]+\":(-?[0-9.]+)".r.findAllMatchIn(qs)
+      .map(m => BigDecimal(m.group(1))).filter(_ >= 0).toSeq
+    assert(value == "1.234" && BigDecimal(value) == printed.sum)
+  }
 }

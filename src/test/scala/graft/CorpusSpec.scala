@@ -217,7 +217,6 @@ class CorpusSpec extends SparkSpec {
   test("z_value interleaves correctly and clusters aligned quadrants") {
     import org.apache.spark.sql.functions._
     import graft.functions.ZOrder
-    ZOrder.register(spark)
     // exact interleave vs a naive bit model
     def naive(a: Long, b: Long): Long =
       (0 until 31).foldLeft(0L)((z, i) =>

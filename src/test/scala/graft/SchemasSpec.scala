@@ -48,10 +48,19 @@ class SchemasSpec extends SparkSpec {
     assert(r.trend_score_current_interest == 20)
   }
 
+  /** The shared session comes from GraftSession, so every entry of the one
+    * function table must resolve in it and in a `newSession()` child — and
+    * through the same builders `install` uses (string cast included). */
   test("GraftSession registers native functions") {
-    val s = GraftSession.local(2)
-    assert(s.sql("SELECT rolling_hash('abc')").head().getLong(0) ==
-      graft.functions.RollingHash.hashString("abc"))
-    assert(s.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head().getDouble(0) == 11.0)
+    val sessions = Seq(spark, spark.newSession())
+    for (s <- sessions; (id, _, _) <- graft.plans.GraftExtensions.functions)
+      assert(s.catalog.functionExists(id.funcName), s"${id.funcName} unresolved")
+    for (s <- sessions) {
+      assert(s.sql("SELECT rolling_hash(123) = rolling_hash('123')").head().getBoolean(0))
+      assert(s.sql("SELECT char_ngrams('abcd', 3)").head().getSeq[String](0) ==
+        Seq("abc", "bcd"))
+      assert(s.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
+        .head().getDouble(0) == 11.0)
+    }
   }
 }
